@@ -28,6 +28,9 @@ Deliberate upgrades over raw markdownify (documented, pinned in goldens):
 This is a brand-new implementation: a minimal DOM built with stdlib
 ``html.parser`` plus a recursive emitter. No code is taken from
 markdownify or the reference.
+
+Emission is linear in document size: each element's children are joined
+once, and sibling positions are computed once per parent.
 """
 
 from __future__ import annotations
@@ -68,24 +71,31 @@ P_CLOSERS = frozenset(
 
 
 class Node:
-    __slots__ = ("name", "attrs", "children", "parent")
+    # first / next_sig / ordinal are sibling facts the emitter records
+    # (see _mark_siblings) before it emits the node
+    __slots__ = ("name", "attrs", "children", "parent",
+                 "first", "next_sig", "ordinal")
 
     def __init__(self, name, attrs=None, parent=None):
         self.name = name  # None => text node; "" => document root
         self.attrs = attrs or {}
         self.children = []
         self.parent = parent
+        self.first = True
+        self.next_sig = None
+        self.ordinal = 0
 
     def get(self, key, default=None):
         return self.attrs.get(key, default)
 
 
 class Text:
-    __slots__ = ("data", "parent")
+    __slots__ = ("data", "parent", "next_sig")
 
     def __init__(self, data, parent):
         self.data = data
         self.parent = parent
+        self.next_sig = None
 
 
 class _DomBuilder(HTMLParser):
@@ -193,26 +203,69 @@ def _has_ancestor(node, names):
     return False
 
 
-def _prev_elem_sibling(node):
-    sibs = node.parent.children if node.parent else []
-    idx = sibs.index(node)
-    for s in reversed(sibs[:idx]):
-        if isinstance(s, Node):
-            return s
-        if isinstance(s, Text) and s.data.strip():
-            return s
-    return None
+def _is_content(el):
+    """Siblings the emitter looks at: elements and non-blank text."""
+    return isinstance(el, Node) or el.data.strip() != ""
 
 
-def _next_elem_sibling(node):
-    sibs = node.parent.children if node.parent else []
-    idx = sibs.index(node)
-    for s in sibs[idx + 1:]:
-        if isinstance(s, Node):
-            return s
-        if isinstance(s, Text) and s.data.strip():
-            return s
-    return None
+def _drop_boundary_blanks(children):
+    """A NESTED_TAGS container's children without the blank text nodes at
+    either end or next to a NESTED_TAGS element (the previous kept child,
+    or the next element child)."""
+    last = len(children) - 1
+    kept = []
+    j = 0  # next element child after a blank; only moves forward
+    for i, el in enumerate(children):
+        if not _is_content(el):
+            prev = kept[-1] if kept else None
+            if i == 0 or i == last or (
+                    isinstance(prev, Node) and prev.name in NESTED_TAGS):
+                continue
+            j = max(j, i + 1)
+            while j < last and isinstance(children[j], Text):
+                j += 1
+            if isinstance(children[j], Node) and children[j].name in NESTED_TAGS:
+                continue
+        kept.append(el)
+    return kept
+
+
+def _mark_siblings(children):
+    """Record each child's sibling facts in one pass each way: whether no
+    content sibling precedes it (``first``), the next content sibling
+    (``next_sig``), and its index among the <li> siblings (``ordinal``)."""
+    nxt = None
+    for el in reversed(children):
+        el.next_sig = nxt
+        if _is_content(el):
+            nxt = el
+    first = True
+    ordinal = 0
+    for el in children:
+        if isinstance(el, Node):
+            el.first = first
+            first = False
+            if el.name == "li":
+                el.ordinal = ordinal
+                ordinal += 1
+        elif first and el.data.strip():
+            first = False
+
+
+def _pop_trailing_newlines(parts):
+    """Strip the trailing newline run off ``"".join(parts)`` in place and
+    return its length. Each part loses its newlines at most once, so the
+    child join stays linear."""
+    n = 0
+    while parts:
+        last = parts[-1]
+        kept = last.rstrip("\n")
+        n += len(last) - len(kept)
+        if kept:
+            parts[-1] = kept
+            break
+        parts.pop()
+    return n
 
 
 class MarkdownEmitter:
@@ -228,36 +281,22 @@ class MarkdownEmitter:
         is_heading_or_cell = node.name in _HEADING_NAMES or node.name in ("td", "th")
         child_inline = as_inline or is_heading_or_cell
 
-        children = list(node.children)
+        children = node.children
         if node.name in NESTED_TAGS:
-            kept = []
-            for i, el in enumerate(children):
-                if isinstance(el, Text) and el.data.strip() == "":
-                    prev_n = kept[-1] if kept and isinstance(kept[-1], Node) else None
-                    nxt = next((c for c in children[i + 1:] if isinstance(c, Node)), None)
-                    boundary = (
-                        i == 0
-                        or i == len(children) - 1
-                        or (prev_n is not None and prev_n.name in NESTED_TAGS)
-                        or (nxt is not None and nxt.name in NESTED_TAGS)
-                    )
-                    if boundary:
-                        continue
-                kept.append(el)
-            children = kept
+            children = _drop_boundary_blanks(children)
+        _mark_siblings(children)
 
-        text = ""
+        parts = []
         for el in children:
             if isinstance(el, Text):
-                text += self._process_text(el)
+                parts.append(self._process_text(el))
             else:
-                left = text.rstrip("\n")
-                nl_left = len(text) - len(left)
+                nl_left = _pop_trailing_newlines(parts)
                 nxt = self._process_tag(el, child_inline)
                 right = nxt.lstrip("\n")
-                nl_right = len(nxt) - len(right)
-                text = left + "\n" * max(nl_left, nl_right) + right
-        return text
+                parts.append("\n" * max(nl_left, len(nxt) - len(right)))
+                parts.append(right)
+        return "".join(parts)
 
     def _process_tag(self, node: Node, as_inline: bool) -> str:
         text = self._children_text(node, as_inline)
@@ -276,7 +315,7 @@ class MarkdownEmitter:
             text = text.replace("*", r"\*").replace("_", r"\_")
         parent = el.parent
         if parent is not None and parent.name == "li":
-            nxt = _next_elem_sibling_text(el)
+            nxt = el.next_sig
             if nxt is None or (isinstance(nxt, Node) and nxt.name in ("ul", "ol")):
                 text = text.rstrip()
         return text
@@ -409,7 +448,7 @@ class MarkdownEmitter:
             p = p.parent
         if nested:
             return "\n" + _LINE_BEGIN_RE.sub("\t", text).rstrip()
-        nxt = _next_elem_sibling(node)
+        nxt = node.next_sig
         before_paragraph = nxt is not None and not (
             isinstance(nxt, Node) and nxt.name in ("ul", "ol")
         )
@@ -422,13 +461,7 @@ class MarkdownEmitter:
                 start = int(parent.get("start", "1"))
             except (TypeError, ValueError):
                 start = 1
-            li_index = 0
-            for sib in parent.children:
-                if isinstance(sib, Node) and sib.name == "li":
-                    if sib is node:
-                        break
-                    li_index += 1
-            bullet = "%s." % (start + li_index)
+            bullet = "%s." % (start + node.ordinal)
         else:
             depth = -1
             p = node
@@ -453,9 +486,9 @@ class MarkdownEmitter:
         ]
         is_headrow = bool(cells) and all(c.name == "th" for c in cells)
         parent = node.parent
-        is_first = _prev_elem_sibling(node) is None
+        is_first = node.first
         if is_first and parent is not None and parent.name in ("thead", "tbody"):
-            is_first = _prev_elem_sibling(parent) is None
+            is_first = parent.first
         n = 0
         for c in cells:
             try:
@@ -479,17 +512,6 @@ class MarkdownEmitter:
         return " " + text.strip().replace("\n", " ") + " |" * colspan
 
     _c_th = _c_td
-
-
-def _next_elem_sibling_text(el):
-    sibs = el.parent.children if el.parent else []
-    idx = sibs.index(el)
-    for s in sibs[idx + 1:]:
-        if isinstance(s, Node):
-            return s
-        if isinstance(s, Text) and s.data.strip():
-            return s
-    return None
 
 
 _EMITTER = MarkdownEmitter()

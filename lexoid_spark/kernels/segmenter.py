@@ -18,24 +18,25 @@ when a per-segment table is needed.
 from __future__ import annotations
 
 import re
+from collections import Counter
 from typing import List, Tuple
 
 _UNDERLINE_RE = re.compile(r"^[^\n]+\n-+$", re.MULTILINE)
-_HASH_LEVELS = ("#####", "####", "###", "##", "#")
+# a line's hash prefix when it is one of the five levels the reference
+# tries ("###### x" and "#x" are no heading at any level)
+_HASH_LEVEL_RE = re.compile(r"^(#{1,5}) ", re.MULTILINE)
 
 
 def find_dominant_heading_level(md: str) -> str:
     """Dominant heading pattern: ``'underline'`` or a hash prefix."""
-    if len(_UNDERLINE_RE.findall(md)) > 1:
+    underlines = _UNDERLINE_RE.finditer(md)
+    if next(underlines, None) is not None and next(underlines, None) is not None:
         return "underline"
-    counts = {}
-    for pattern in _HASH_LEVELS:
-        matches = re.findall(rf"^{pattern} .*$", md, re.MULTILINE)
-        if len(matches) > 1:
-            counts[pattern] = len(matches)
-    if not counts:
+    counts = Counter(_HASH_LEVEL_RE.findall(md))
+    repeated = [level for level, n in counts.items() if n > 1]
+    if not repeated:
         return "#"
-    return min(counts.keys(), key=len)
+    return min(repeated, key=len)
 
 
 def split_md_by_headings(md: str, heading_pattern: str) -> List[Tuple[str, str]]:

@@ -52,3 +52,8 @@ def test_segment_md_end_to_end():
     segs = segment_md(md)
     assert [s[0] for s in segs] == ["Introduction", "One", "Two"]
     assert [s[1] for s in segs] == ["", "a", "b"]
+
+
+def test_dominant_level_ignores_six_hash_and_no_space_lines():
+    md = "###### a\n###### b\n#x\n#y\n##\n##\n### c\nbody\n### d\nbody"
+    assert find_dominant_heading_level(md) == "###"
