@@ -582,7 +582,10 @@ def gen_page_row(i: int, p_giant: float = 0.0) -> Tuple[str, dt.datetime, bytes,
         cls = ALL_CLASSES[i % len(ALL_CLASSES)]
         payload = _BUILDERS[cls](i, r)
     url = f"https://fixtures.test/{cls}/{i:06d}"
-    ts = EPOCH + dt.timedelta(seconds=i * 37)
+    # 37 s per index leaves datetime's range (year 9999) near i = 6.8e9;
+    # wrap the offset so the 10^12-row design point still generates,
+    # keeping the timestamp of every index below 6e9 as it was
+    ts = EPOCH + dt.timedelta(seconds=(i % 6_000_000_000) * 37)
     text = _sentence(_rng(i * 2 + 1), 24)
     lang = LANGS[i % len(LANGS)]
     return (url, ts, payload, text, lang)

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lexoid_spark.kernels.html_md import html_to_md
-from lexoid_spark.kernels.pdf_md import pdf_flags, pdf_to_pages, sniff_doctype
+from lexoid_spark.kernels.pdf_md import pdf_flags, pdf_to_pages
 from lexoid_spark.kernels.segmenter import segment_md
 from lexoid_spark.kernels.table_md import csv_to_md
 
@@ -60,12 +60,6 @@ def html_main_to_md_udf(payloads: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-@F.pandas_udf(RAW_ERR_TYPE)
-def csv_to_md_udf(payloads: pd.Series) -> pd.DataFrame:
-    rows = [_guarded(csv_to_md)(p) for p in payloads]
-    return pd.DataFrame(rows)
-
-
 def _txt_decode(payload) -> str:
     from lexoid_spark.kernels.text_ops import decode_payload
 
@@ -82,11 +76,6 @@ def _txt_decode(payload) -> str:
 def txt_decode_udf(payloads: pd.Series) -> pd.DataFrame:
     rows = [_guarded(_txt_decode)(p) for p in payloads]
     return pd.DataFrame(rows)
-
-
-@F.pandas_udf(T.StringType())
-def sniff_doctype_udf(payloads: pd.Series) -> pd.Series:
-    return payloads.map(sniff_doctype)
 
 
 @F.pandas_udf(T.StructType([

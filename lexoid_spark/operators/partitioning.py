@@ -76,15 +76,6 @@ def split_giant_tail(df: DataFrame, num_partitions: int,
     return bulk.unionByName(tail)
 
 
-def with_size_bucket(df: DataFrame, payload_col: str = "html",
-                     col_name: str = "size_bucket") -> DataFrame:
-    """Coarse log2 byte-size bucket column (for lineage/bench reporting)."""
-    return df.withColumn(
-        col_name,
-        F.floor(F.log2(F.greatest(F.length(F.col(payload_col)), F.lit(1)))),
-    )
-
-
 def write_bucketed(df: DataFrame, table: str, key: str = "url",
                    n_buckets: int = 64, sort: bool = True) -> None:
     """Persist a table bucketed (and sorted) by ``key`` so every later

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lexoid_spark.functions.udfs import pdf_flags_udf, sniff_doctype_udf
+from lexoid_spark.functions.udfs import pdf_flags_udf
 
 
 def with_doctype(df: DataFrame, payload_col: str = "html") -> DataFrame:
@@ -121,11 +121,6 @@ def with_doctype(df: DataFrame, payload_col: str = "html") -> DataFrame:
         )
         .otherwise(F.lit("txt")),
     )
-
-
-def with_doctype_kernel(df: DataFrame, payload_col: str = "html") -> DataFrame:
-    """Pandas-UDF variant of the sniff (kept for parity testing)."""
-    return df.withColumn("doctype", sniff_doctype_udf(F.col(payload_col)))
 
 
 def with_pdf_flags(df: DataFrame, payload_col: str = "html") -> DataFrame:

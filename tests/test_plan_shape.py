@@ -51,6 +51,21 @@ def test_dimension_joins_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_query_tail_sorts_in_one_partition(spark):
+    """`_srt` tails: one round-robin exchange to a single partition and
+    a local sort. No range exchange (its boundary sampler runs the
+    child a second time) and no persist pin of the result."""
+    import __spark_entry__ as em
+
+    q1 = em.queries()["q1_pricing_summary"](spark, em.SF001)
+    assert q1.collect()
+    plan = _formatted(q1)
+    assert "isFinalPlan=true" in plan
+    assert "SinglePartition" in plan
+    assert "rangepartitioning" not in plan.lower()
+    assert "InMemoryRelation" not in plan
+
+
 def test_no_shuffle_without_repartition(spark, bench_pages):
     from lexoid_spark.plans.extract import extract
 

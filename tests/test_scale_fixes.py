@@ -281,3 +281,27 @@ def test_gopher_stopword_rule(spark):
     ).collect()}
     assert got[1]["sw"] and got[1]["ps"] and got[1]["p"]
     assert got[2]["p"] and not got[2]["sw"] and not got[2]["ps"]
+
+
+def test_gen_page_row_at_design_point():
+    """gen_page_row stays total at the 10^12-row design point (the raw
+    37 s/index timestamp offset overflows datetime near 6.8e9) and keeps
+    the timestamps of every index below the wrap."""
+    import datetime as dt
+    import hashlib
+
+    from lexoid_spark.corpus.gen import gen_page_row
+
+    for i in (7_000_000_000, 10**12):
+        url, ts, payload, text, lang = gen_page_row(i)
+        assert url.endswith(str(i)) and payload and text
+        assert isinstance(ts, dt.datetime)
+
+    url, ts, payload, text, lang = gen_page_row(12345)
+    assert url == "https://fixtures.test/pdf_compact/012345"
+    assert ts == dt.datetime(2024, 1, 6, 6, 52, 45, tzinfo=dt.timezone.utc)
+    assert hashlib.md5(payload).hexdigest() == "5b4a44020339e13987c64435bc5f6958"
+    assert lang == "en"
+    assert text.startswith("shard window vector group index")
+    assert gen_page_row(5_999_999_999)[1] == dt.datetime(
+        9058, 11, 25, 10, 39, 23, tzinfo=dt.timezone.utc)

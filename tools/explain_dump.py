@@ -1,10 +1,14 @@
-"""Dump .explain("formatted") for declared queries to plans/r06/.
+r"""Dump .explain("formatted") for declared queries to plans/r06/.
 
 Usage:
     python tools/explain_dump.py <suffix> [query ...]
 
-Writes plans/r06/<query>_<suffix>.txt for each named query (default:
-none — list required). Uses the same session shape as bench.py.
+Writes plans/r06/<query>_<suffix>.txt for each named query, or for
+every ``queries()`` entry when none is named — the full plan set a
+refactor is compared by (``diff`` two suffixes after masking the
+session counters: ``#\d+`` expression ids, ``plan_id=\d+`` and
+``RDD[\d+]``, which shift even between two runs of one commit). Uses
+the same session shape as bench.py.
 """
 
 from __future__ import annotations
@@ -20,11 +24,10 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
-    if not names:
-        print("usage: explain_dump.py <suffix> <query> [query ...]")
+    if len(sys.argv) < 2:
+        print("usage: explain_dump.py <suffix> [query ...]")
         sys.exit(2)
+    suffix = sys.argv[1]
 
     from contextlib import redirect_stdout
 
@@ -34,6 +37,7 @@ def main() -> None:
     spark = get_spark("lexoid_spark_explain", cores=CPUS,
                       shuffle_partitions=int(CPUS))
     qs = entry_mod.queries()
+    names = sys.argv[2:] or list(qs)
     outdir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", "r06")
     os.makedirs(outdir, exist_ok=True)
